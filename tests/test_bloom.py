@@ -9,7 +9,14 @@ from webarchive_discovery_spark.operators.bloom import (
     BloomParams,
     PartitionedBloom,
     bloom_negative_filter,
+    bloom_negative_filter_sharded,
     build_bloom,
+    build_bloom_shards,
+)
+from webarchive_discovery_spark.operators.cuckoo import (
+    CuckooParams,
+    build_cuckoo_shards,
+    cuckoo_negative_filter_sharded,
 )
 
 
@@ -109,55 +116,83 @@ def test_sharded_probe_empty_shard_is_unseen(spark):
     assert got[4] is True and got[5] is False
 
 
-def test_counting_bloom_remove_and_export():
-    """CountingBloom (deletion tier of the north-rule's counting/cuckoo
-    hybrid): removed members become negative again, kept members NEVER do
-    (no false negatives — the prefilter contract); to_bloom() exports
-    bit-identical membership to a fresh bit-Bloom build."""
-    import numpy as np
+# The three seen tiers, each as (build(seen) -> filter, probe(df, filter)).
+_BP = BloomParams(n_capacity=5000, fpr=1e-4, num_shards=8)
+_CP = CuckooParams(n_capacity=5000, fpr=1e-4, num_shards=8)
+SEEN_TIERS = {
+    "broadcast_bloom": (
+        lambda seen: build_bloom(seen, "url_hash", _BP),
+        lambda df, f: bloom_negative_filter(df, "url_hash", f),
+    ),
+    "sharded_bloom": (
+        lambda seen: build_bloom_shards(seen, "url_hash", _BP),
+        lambda df, f: bloom_negative_filter_sharded(df, "url_hash", f, _BP),
+    ),
+    "sharded_cuckoo": (
+        lambda seen: build_cuckoo_shards(seen, "url_hash", _CP),
+        lambda df, f: cuckoo_negative_filter_sharded(df, "url_hash", f, _CP),
+    ),
+}
 
-    from webarchive_discovery_spark.operators.bloom import (
-        BloomParams, CountingBloom, PartitionedBloom,
+# odd hashes above 2^62: float64 cannot hold any of them exactly
+_BIG = [2**62 + 2 * i + 1 for i in range(64)]
+
+
+@pytest.mark.parametrize("tier", SEEN_TIERS)
+@pytest.mark.parametrize("null_side", ["build", "probe"])
+def test_null_hash_keeps_the_prefilter_contract(spark, tier, null_side):
+    """Arrow hands pandas an int64 column that holds a NULL as float64.  A
+    NULL among hashes above 2^53 in one partition used to drop their low
+    bits (every member a false negative on the broadcast tier) or fail the
+    sharded builds.  NULL is never inserted and always probes unseen."""
+    build, probe = SEEN_TIERS[tier]
+    rows = [(h,) for h in _BIG]
+    with_null = spark.createDataFrame(rows + [(None,)], "url_hash long").coalesce(1)
+    plain = spark.createDataFrame(rows, "url_hash long").coalesce(1)
+    seen, probed = (with_null, plain) if null_side == "build" else (plain, with_null)
+    got = probe(probed, build(seen)).collect()
+    assert sorted(r["url_hash"] for r in got if r["maybe_seen"]) == _BIG
+    assert [r["maybe_seen"] for r in got if r["url_hash"] is None] == (
+        [False] if null_side == "probe" else []
     )
 
-    p = BloomParams(n_capacity=5000, fpr=1e-4, num_shards=4)
-    cb = CountingBloom(p)
-    rng = np.random.default_rng(7)
-    a = rng.integers(-2**62, 2**62, 3000, dtype=np.int64)
-    fresh = rng.integers(-2**62, 2**62, 3000, dtype=np.int64)
-    cb.add_hashes(a)
-    assert cb.contains_hashes(a).all()
-    cb.remove_hashes(a[:1500])
-    assert cb.contains_hashes(a[1500:]).all()  # no false negatives, ever
-    assert cb.contains_hashes(a[:1500]).mean() < 0.01  # removal works
-    assert cb.contains_hashes(fresh).mean() < 0.01     # FPR holds
 
-    bm = cb.to_bloom()
-    assert (bm.contains_hashes(a[1500:]) == cb.contains_hashes(a[1500:])).all()
-    assert (bm.contains_hashes(fresh) == cb.contains_hashes(fresh)).all()
-
-    # no-removal parity: counting build exports the exact bit Bloom
-    pb = PartitionedBloom(p)
-    pb.add_hashes(a)
-    cb2 = CountingBloom(p)
-    cb2.add_hashes(a)
-    assert (cb2.to_bloom().bits == pb.bits).all()
-
-
-def test_counting_bloom_saturation_safety():
-    """A saturated cell is never incremented or decremented again —
-    removing through a saturated cell must not create false negatives."""
-    import numpy as np
-
-    from webarchive_discovery_spark.operators.bloom import BloomParams, CountingBloom
-
-    p = BloomParams(n_capacity=64, fpr=1e-3, num_shards=2)
-    cb = CountingBloom(p)
-    dup = np.repeat(np.int64(12345), 1000)
-    for _ in range(3):
-        cb.add_hashes(dup)
-    assert cb.counts.max() == 255
-    cb.remove_hashes(dup)
-    assert cb.contains_hashes(np.array([12345], dtype=np.int64)).all()
-    merged = cb.merge(cb)  # saturating elementwise sum
-    assert merged.counts.max() == 255
+@pytest.mark.parametrize("tier", SEEN_TIERS)
+def test_seen_tiers_match_exact_set_difference(spark, tier):
+    """Differential check of every seen tier against the exact anti-join:
+    "definitely unseen ∪ (maybe seen minus the exact seen-set)" must be the
+    exact set difference, and no seen member may probe unseen.  Inputs:
+    an empty seen set, a shard with no entries, negative hashes, hashes
+    above 2^53 and NULLs on both sides."""
+    build, probe = SEEN_TIERS[tier]
+    rng = np.random.default_rng(11)
+    hashes = (
+        [int(h) for h in rng.integers(-(2**63), 2**63 - 1, 400, dtype=np.int64)]
+        + _BIG + [0, -1, 2**63 - 1, -(2**63)]
+    )
+    # shard 7 of 8 (hash & 7 == 7, which is pmod 8 == 7) gets no entry
+    members = [h for h in hashes[::2] if h % 8 != 7]
+    assert any(h % 8 == 7 for h in hashes)
+    universe = spark.createDataFrame(
+        list(enumerate(hashes)) + [(len(hashes), None)], "id long, url_hash long"
+    )
+    cases = {
+        "empty": [],
+        "populated": [(h,) for h in members] + [(None,)],
+    }
+    for case, seen_rows in cases.items():
+        seen = spark.createDataFrame(seen_rows, "url_hash long")
+        probed = probe(universe, build(seen)).persist()
+        maybe = probed.filter("maybe_seen").select("id", "url_hash")
+        unseen = probed.filter("NOT maybe_seen").select("id", "url_hash").unionByName(
+            maybe.join(seen, "url_hash", "left_anti").select("id", "url_hash")
+        )
+        exact = universe.join(seen, "url_hash", "left_anti")
+        assert sorted(r["id"] for r in unseen.collect()) == sorted(
+            r["id"] for r in exact.collect()
+        ), case
+        member_set = {r[0] for r in seen_rows if r[0] is not None}
+        rows = probed.collect()
+        assert len(rows) == universe.count(), case
+        assert all(r["maybe_seen"] for r in rows if r["url_hash"] in member_set), case
+        probed.unpersist()

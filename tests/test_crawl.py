@@ -185,7 +185,7 @@ def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
     the fully-distributed sharded build/probe: the driver-merge tier
     (``build_bloom``, which treeReduces the whole bit matrix to the driver)
     is monkeypatched to fail, capacity is the 1e10 design point (full matrix
-    ≈ 36 GB — far past ``bloom_driver_matrix_max_bytes``), and the crawl
+    ≈ 36 GB — far past the driver-matrix limit), and the crawl
     output must equal the exact-only (no-Bloom) run bit-for-bit, proving the
     Bloom stays a pure prefilter on this tier too."""
     import webarchive_discovery_spark.plans.crawl as crawl_mod
@@ -218,8 +218,8 @@ def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
 
 def test_recrawl_expiry_refetches(spark, world):
     """recrawl_epochs: a URL whose seen-set entry expires is refetched when
-    rediscovered (the deletion the counting-Bloom tier models; exact side
-    authoritative), and within the window it is still dup_seen."""
+    rediscovered (exact side authoritative; the prefilter is rebuilt from
+    the membership set), and within the window it is still dup_seen."""
     records, seeds, links, robots = world
     cfg = CrawlConfig(
         epochs=5, host_budget=50, bloom_capacity=100_000, bloom_fpr=1e-4,
@@ -592,3 +592,26 @@ def test_torn_snapshot_invisible_and_resume_clean(spark, world, tmp_path):
     # no temp litter under the root after the commit sweep
     leftover = [d for d in os.listdir(ckdir) if d.endswith(".tmp")]
     assert leftover == [".epoch=00002.killed.tmp"] or leftover == []
+
+
+def test_oversized_png_header_is_fetch_error(spark):
+    """A fetched PNG whose IHDR claims a width past 2^31-1 does not fit the
+    int32 ``header_w`` column.  It used to fail the whole crawl job; the
+    out-of-range dim now stays NULL and the row comes out fetch_ok=false
+    (status fetch_error)."""
+    import struct
+    import zlib
+
+    from webarchive_discovery_spark.plans.crawl import _fetch_simulate
+
+    ihdr = struct.pack(">IIBBBBB", 0x90000000, 16, 8, 2, 0, 0, 0)
+    png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
+           + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr)))
+    records = spark.createDataFrame(
+        [("img-big", bytearray(png), "png", "cap", 0, 16, 16)],
+        "image_id string, bytes binary, fmt string, caption string, phash long, "
+        "w int, h int",
+    )
+    [row] = _fetch_simulate(records).collect()
+    assert row["fetch_ok"] is False
+    assert row["header_w"] is None and row["header_h"] == 16

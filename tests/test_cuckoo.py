@@ -112,6 +112,14 @@ def test_sharded_probe_empty_shard_is_unseen(spark):
     assert probed.filter(F.col("maybe_seen")).count() == 0
 
 
+def test_sharded_build_overflow_names_the_shard(spark):
+    # 16 slots per shard; 500 odd keys all land in shard 1
+    p = C.CuckooParams(n_capacity=16, fpr=1e-3, num_shards=2, max_kicks=10)
+    seen = spark.range(500).select((F.col("id") * 2 + 1).alias("url_hash"))
+    with pytest.raises(Exception, match="cuckoo shard 1 overflow"):
+        C.build_cuckoo_shards(seen, "url_hash", p).collect()
+
+
 def test_fpr_holds_within_a_shard():
     """Sharding selects on hash mod num_shards (low bits).  Within one
     shard every raw hash shares those low bits, so a fingerprint taken from

@@ -622,6 +622,18 @@ def test_simhash_components_contraction_equivalence(spark):
     assert comp_of[16] == 16 and len({c for _, c in contracted}) == 2
 
 
+def test_simhash_components_null_hash_is_singleton(spark):
+    """A row whose hash is NULL is near nothing: it comes back as its own
+    singleton component instead of being dropped by the final join."""
+    from webarchive_discovery_spark.operators.dedup import simhash_components
+
+    df = spark.createDataFrame(
+        [(10, 7), (11, 7), (12, None), (13, None)], "doc_id long, simhash long"
+    )
+    got = {(r.id, r.component) for r in simhash_components(df, max_hamming=3).collect()}
+    assert got == {(10, 10), (11, 10), (12, 12), (13, 13)}
+
+
 def test_gopher_quality_filter_rules(spark):
     """Per-rule audit flags + conjunction; bullet/ellipsis line rules."""
     from webarchive_discovery_spark.operators.textstats import gopher_quality_filter

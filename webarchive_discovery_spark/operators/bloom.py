@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 __all__ = [
     "BloomParams",
@@ -36,7 +36,6 @@ __all__ = [
     "bloom_negative_filter",
     "build_bloom_shards",
     "bloom_negative_filter_sharded",
-    "CountingBloom",
 ]
 
 
@@ -64,13 +63,16 @@ class BloomParams:
         return max(1, round((self.m_bits_per_shard * self.num_shards / self.n_capacity) * math.log(2)))
 
 
-def _probe_indexes(h: np.ndarray, k: int, m: int) -> np.ndarray:
-    """Kirsch–Mitzenmacher: index_i = (h1 + i*h2) mod m from one 64-bit hash."""
-    h = h.astype(np.uint64)
+def _shard_probe_masks(hashes: np.ndarray, params: BloomParams):
+    """(word index, bit mask) of every probe, shape (k, n), for hashes
+    WITHIN one shard.  Kirsch–Mitzenmacher: bit index_i = (h1 + i*h2) mod m
+    from one 64-bit hash."""
+    h = hashes.astype(np.uint64)
     h1 = h & np.uint64(0xFFFFFFFF)
     h2 = (h >> np.uint64(32)) | np.uint64(1)  # odd-ish second hash
-    i = np.arange(k, dtype=np.uint64)[:, None]
-    return ((h1[None, :] + i * h2[None, :]) % np.uint64(m)).astype(np.int64)
+    i = np.arange(params.k_hashes, dtype=np.uint64)[:, None]
+    idx = ((h1[None, :] + i * h2[None, :]) % np.uint64(params.m_bits_per_shard)).astype(np.int64)
+    return idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64)
 
 
 class PartitionedBloom:
@@ -85,30 +87,34 @@ class PartitionedBloom:
             else np.zeros((params.num_shards, words), dtype=np.uint64)
         )
 
-    def add_hashes(self, hashes: np.ndarray) -> None:
-        p = self.params
+    def _cells(self, hashes: np.ndarray):
+        """Shard (n,), word index and bit mask (k, n) of every probe."""
         h = hashes.astype(np.uint64)
-        shard = (h % np.uint64(p.num_shards)).astype(np.int64)
-        idx = _probe_indexes(h, p.k_hashes, p.m_bits_per_shard)  # (k, n)
-        word = idx >> 6
-        mask = np.uint64(1) << (idx & 63).astype(np.uint64)
-        for ki in range(p.k_hashes):
+        shard = (h % np.uint64(self.params.num_shards)).astype(np.int64)
+        return (shard, *_shard_probe_masks(h, self.params))
+
+    def add_hashes(self, hashes: np.ndarray) -> None:
+        shard, word, mask = self._cells(hashes)
+        for ki in range(self.params.k_hashes):
             np.bitwise_or.at(self.bits, (shard, word[ki]), mask[ki])
 
     def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        p = self.params
-        h = hashes.astype(np.uint64)
-        shard = (h % np.uint64(p.num_shards)).astype(np.int64)
-        idx = _probe_indexes(h, p.k_hashes, p.m_bits_per_shard)
-        word = idx >> 6
-        mask = np.uint64(1) << (idx & 63).astype(np.uint64)
-        out = np.ones(len(h), dtype=bool)
-        for ki in range(p.k_hashes):
+        shard, word, mask = self._cells(hashes)
+        out = np.ones(len(shard), dtype=bool)
+        for ki in range(self.params.k_hashes):
             out &= (self.bits[shard, word[ki]] & mask[ki]) != 0
         return out
 
     def merge(self, other: "PartitionedBloom") -> "PartitionedBloom":
         return PartitionedBloom(self.params, self.bits | other.bits)
+
+
+def _non_null_hashes(df: DataFrame, hash_col: str) -> DataFrame:
+    """The hash column minus NULLs, which are never members.  The filter
+    sits in the plan, ahead of the Python stage, because Arrow hands pandas
+    an int64 column that holds a NULL as float64, which drops the low bits
+    of every hash above 2^53."""
+    return df.select(hash_col).filter(F.col(hash_col).isNotNull())
 
 
 def build_bloom(df: DataFrame, hash_col: str, params: BloomParams) -> PartitionedBloom:
@@ -124,12 +130,11 @@ def build_bloom(df: DataFrame, hash_col: str, params: BloomParams) -> Partitione
     def partial(it):
         bloom = PartitionedBloom(params)
         for pdf in it:
-            vals = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
-            bloom.add_hashes(vals)
+            bloom.add_hashes(pdf[hash_col].to_numpy(dtype=np.int64))
         yield pd.DataFrame({"bits": [bloom.bits.tobytes()]})
 
     partials = (
-        df.select(hash_col)
+        _non_null_hashes(df, hash_col)
         .mapInPandas(partial, "bits binary")
         .rdd.map(lambda r: np.frombuffer(r["bits"], dtype=np.uint64).reshape(shards, words))
         .treeReduce(lambda a, b: a | b)
@@ -141,7 +146,9 @@ def bloom_negative_filter(
     spark_df: DataFrame, hash_col: str, bloom: PartitionedBloom
 ) -> DataFrame:
     """Mark rows by Bloom membership: adds ``maybe_seen`` boolean.
-    ``maybe_seen = false`` ⇒ definitely unseen (skip the exact anti-join)."""
+    ``maybe_seen = false`` ⇒ definitely unseen (skip the exact anti-join).
+    NULL-hash rows are definitely unseen: the UDF sees them as 0, so Arrow
+    keeps the column int64, and its answer for them is discarded."""
     sc = spark_df.sparkSession.sparkContext
     b_bits = sc.broadcast(bloom.bits)
     params = bloom.params
@@ -151,32 +158,37 @@ def bloom_negative_filter(
         local = PartitionedBloom(params, b_bits.value)
         return pd.Series(local.contains_hashes(h.to_numpy(dtype=np.int64)))
 
-    return spark_df.withColumn("maybe_seen", probe(F.col(hash_col)))
+    # on a non-nullable column the optimizer folds both NULL guards away
+    h = F.col(hash_col)
+    return spark_df.withColumn(
+        "maybe_seen",
+        F.when(h.isNull(), F.lit(False)).otherwise(probe(F.coalesce(h, F.lit(0)))),
+    )
 
 
-def _shard_probe_masks(hashes: np.ndarray, params: BloomParams):
-    """(word index, bit mask) per probe for hashes WITHIN one shard."""
-    idx = _probe_indexes(hashes.astype(np.uint64), params.k_hashes, params.m_bits_per_shard)
-    return idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64)
+# ---------------------------------------------------------------------------
+# Sharded tier: the dataflow every sharded membership filter shares (the
+# cuckoo tier in ``cuckoo.py`` too).  Only the numpy kernels differ.
+# ---------------------------------------------------------------------------
+
+def _shard_key(hash_col: str, num_shards: int):
+    return F.pmod(F.col(hash_col), F.lit(num_shards)).cast("int")
 
 
-def build_bloom_shards(df: DataFrame, hash_col: str, params: BloomParams) -> DataFrame:
-    """Fully-distributed build at the 1e10 design point: ONE shuffle on
-    ``shard_id = hash mod num_shards``; each task builds its whole shard's
-    bit array in isolation (no partial-merge, no driver materialization).
-    Returns a DataFrame ``(shard_id int, bits binary)`` — the durable form
-    (write it to parquet next to the seen-set snapshot for resume).  Peak
-    per-task memory = one shard = ``m_bits_per_shard/8`` bytes (~35 MB at
-    the design point with 1024 shards)."""
-    words = params.m_bits_per_shard // 64
+def _shard_partitions(df: DataFrame, num_shards: int) -> int:
+    return min(num_shards, df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _build_shards(df: DataFrame, hash_col: str, num_shards: int, build_kernel) -> DataFrame:
+    """ONE shuffle on ``shard_id = hash mod num_shards``; each task runs
+    ``build_kernel(shard_id, hashes int64 ndarray) -> bytes`` over its
+    whole shard in isolation.  Returns ``(shard_id int, blob binary)``, with no row for a
+    shard that holds no key."""
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(words, dtype=np.uint64)
-        h = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
-        word, mask = _shard_probe_masks(h, params)
-        for ki in range(params.k_hashes):
-            np.bitwise_or.at(bits, word[ki], mask[ki])
-        return pd.DataFrame({"shard_id": [int(key[0])], "bits": [bits.tobytes()]})
+        shard_id = int(key[0])
+        blob = build_kernel(shard_id, pdf[hash_col].to_numpy(dtype=np.int64))
+        return pd.DataFrame({"shard_id": [shard_id], "blob": [blob]})
 
     # explicit shard-keyed repartition: the shuffled bytes are tiny (8 B/key)
     # but each group runs a REAL per-shard build kernel — AQE would coalesce
@@ -184,154 +196,79 @@ def build_bloom_shards(df: DataFrame, hash_col: str, params: BloomParams) -> Dat
     # (guide §2.5: exploding/compute-heavy groups; user repartitions are
     # never coalesced, and the groupBy reuses this exchange)
     return (
-        df.select(hash_col)
-        .withColumn("_shard", F.pmod(F.col(hash_col), F.lit(params.num_shards)).cast("int"))
-        .repartition(
-            min(params.num_shards, df.sparkSession.sparkContext.defaultParallelism),
-            "_shard",
-        )
+        _non_null_hashes(df, hash_col)
+        .withColumn("_shard", _shard_key(hash_col, num_shards))
+        .repartition(_shard_partitions(df, num_shards), "_shard")
         .groupBy("_shard")
-        .applyInPandas(build, "shard_id int, bits binary")
+        .applyInPandas(build, "shard_id int, blob binary")
     )
+
+
+def _probe_shards(
+    df: DataFrame, hash_col: str, shards: DataFrame, num_shards: int, probe_kernel
+) -> DataFrame:
+    """Cogroup rows with their shard's blob on ``shard_id`` — each task
+    holds exactly ONE shard plus its rows (never a blob-per-row join, never
+    the full filter).  Adds ``maybe_seen = probe_kernel(blob, hashes int64
+    ndarray)``; ``false`` ⇒ definitely unseen.  Rows whose shard has no
+    entry are definitely unseen without a kernel call.  That covers
+    NULL-hash rows too: their shard key is NULL, which no shard carries."""
+    out_schema = StructType(df.schema.fields + [StructField("maybe_seen", BooleanType())])
+    cols = list(df.columns)
+
+    def probe(key, rows: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+        if rows.empty:
+            return pd.DataFrame(columns=cols + ["maybe_seen"])
+        rows = rows[cols].copy()
+        rows["maybe_seen"] = False if shard.empty else probe_kernel(
+            bytes(shard["blob"].iloc[0]), rows[hash_col].to_numpy(dtype=np.int64)
+        )
+        return rows
+
+    # shard-keyed repartition ahead of the cogroup — same AQE-coalescing
+    # guard as the build (the probe kernel is the compute, not the shuffled
+    # bytes)
+    n_parts = _shard_partitions(df, num_shards)
+    left = (
+        df.withColumn("_shard", _shard_key(hash_col, num_shards))
+        .repartition(n_parts, "_shard")
+        .groupBy("_shard")
+    )
+    right = shards.repartition(n_parts, "shard_id").groupBy("shard_id")
+    return left.cogroup(right).applyInPandas(probe, out_schema)
+
+
+def build_bloom_shards(df: DataFrame, hash_col: str, params: BloomParams) -> DataFrame:
+    """Fully-distributed build at the 1e10 design point: each task builds
+    its whole shard's bit array in isolation (no partial-merge, no driver
+    materialization).  Returns a DataFrame ``(shard_id int, blob binary)``
+    — the durable form (write it to parquet next to the seen-set snapshot
+    for resume).  Peak per-task memory = one shard = ``m_bits_per_shard/8``
+    bytes (~35 MB at the design point with 1024 shards)."""
+    words = params.m_bits_per_shard // 64
+
+    def build(_shard_id: int, h: np.ndarray) -> bytes:
+        bits = np.zeros(words, dtype=np.uint64)
+        word, mask = _shard_probe_masks(h, params)
+        for ki in range(params.k_hashes):
+            np.bitwise_or.at(bits, word[ki], mask[ki])
+        return bits.tobytes()
+
+    return _build_shards(df, hash_col, params.num_shards, build)
 
 
 def bloom_negative_filter_sharded(
     spark_df: DataFrame, hash_col: str, shards: DataFrame, params: BloomParams
 ) -> DataFrame:
-    """Sharded probe: cogroup rows with their shard's bit array on
-    ``shard_id`` — each task holds exactly ONE shard plus its rows (never a
-    bits-per-row join, never the full matrix).  Adds ``maybe_seen``;
-    ``false`` ⇒ definitely unseen.  Rows whose shard has no entry (nothing
-    ever added) are definitely unseen."""
-    from pyspark.sql.types import StructField, StructType
+    """Sharded probe against :func:`build_bloom_shards` output.  Adds
+    ``maybe_seen``; ``false`` ⇒ definitely unseen."""
 
-    out_schema = StructType(spark_df.schema.fields + [StructField("maybe_seen", BooleanType())])
-    cols = list(spark_df.columns)
-
-    def probe(key, rows: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        if rows.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if shard.empty:
-            rows = rows[cols].copy()
-            rows["maybe_seen"] = False
-            return rows
-        bits = np.frombuffer(bytes(shard["bits"].iloc[0]), dtype=np.uint64)
-        h = rows[hash_col].to_numpy(dtype=np.int64, na_value=0)
+    def probe(blob: bytes, h: np.ndarray) -> np.ndarray:
+        bits = np.frombuffer(blob, dtype=np.uint64)
         word, mask = _shard_probe_masks(h, params)
         seen = np.ones(len(h), dtype=bool)
         for ki in range(params.k_hashes):
             seen &= (bits[word[ki]] & mask[ki]) != 0
-        rows = rows[cols].copy()
-        rows["maybe_seen"] = seen
-        return rows
+        return seen
 
-    # shard-keyed repartition ahead of the cogroup — same AQE-coalescing
-    # guard as the sharded build (the probe kernel is the compute, not the
-    # shuffled bytes)
-    n_parts = min(
-        params.num_shards, spark_df.sparkSession.sparkContext.defaultParallelism
-    )
-    left = spark_df.withColumn(
-        "_shard", F.pmod(F.col(hash_col), F.lit(params.num_shards)).cast("int")
-    ).repartition(n_parts, "_shard").groupBy("_shard")
-    right = shards.repartition(n_parts, "shard_id").groupBy("shard_id")
-    return left.cogroup(right).applyInPandas(probe, out_schema)
-
-
-class CountingBloom:
-    """Counting variant of :class:`PartitionedBloom` — supports REMOVAL, the
-    half of the north-rule's "counting-Bloom/cuckoo hybrid" a recrawl
-    pipeline needs: when a seen-set entry expires (content older than the
-    recrawl interval), its URL is removed so the frontier revisits it.
-
-    Same shard layout and Kirsch–Mitzenmacher probes as the bit Bloom;
-    cells are uint8 counters with SATURATION semantics: a cell that reaches
-    255 is never incremented or decremented again (the standard safe rule —
-    decrementing a saturated cell could drive it to zero while other members
-    still probe it, creating false negatives, which would break the
-    prefilter's "negative is definitive" contract).  Memory is 8× the bit
-    Bloom (one byte per bit-cell); pack to 4-bit counters for 4× if the
-    design point demands it.  ``to_bloom()`` exports the current membership
-    as a broadcastable bit Bloom for the probe side, so the counting tier
-    lives only where state is mutated (the seen-set maintainer), never on
-    the hot probe path."""
-
-    SATURATED = np.uint8(255)
-
-    def __init__(self, params: BloomParams, counts: np.ndarray | None = None):
-        self.params = params
-        self.counts = (
-            counts
-            if counts is not None
-            else np.zeros((params.num_shards, params.m_bits_per_shard), dtype=np.uint8)
-        )
-
-    def _cells(self, hashes: np.ndarray):
-        p = self.params
-        h = hashes.astype(np.uint64)
-        shard = (h % np.uint64(p.num_shards)).astype(np.int64)
-        idx = _probe_indexes(h, p.k_hashes, p.m_bits_per_shard)  # (k, n)
-        return shard, idx
-
-    def _unique_cells(self, shard: np.ndarray, idx_k: np.ndarray):
-        """(shard_idx, cell_idx, multiplicity) with duplicate cells in the
-        batch collapsed — saturation arithmetic needs exact per-cell deltas,
-        and ``np.add.at`` on raw uint8 would wrap past 255."""
-        m = self.params.m_bits_per_shard
-        lin = shard * np.int64(m) + idx_k
-        uniq, cnt = np.unique(lin, return_counts=True)
-        return uniq // m, uniq % m, cnt
-
-    def add_hashes(self, hashes: np.ndarray) -> None:
-        shard, idx = self._cells(hashes)
-        for ki in range(self.params.k_hashes):
-            us, ui, cnt = self._unique_cells(shard, idx[ki])
-            cur = self.counts[us, ui]
-            new = np.minimum(cur.astype(np.int64) + cnt, 255).astype(np.uint8)
-            new[cur == self.SATURATED] = self.SATURATED
-            self.counts[us, ui] = new
-
-    def remove_hashes(self, hashes: np.ndarray) -> None:
-        """Remove previously-added members.  Removing a hash that was never
-        added is UNDEFINED (as in every counting Bloom) — the seen-set
-        maintainer only feeds confirmed members here.  Saturated cells are
-        never decremented (their true count is unknown)."""
-        shard, idx = self._cells(hashes)
-        for ki in range(self.params.k_hashes):
-            us, ui, cnt = self._unique_cells(shard, idx[ki])
-            cur = self.counts[us, ui]
-            new = np.maximum(cur.astype(np.int64) - cnt, 0).astype(np.uint8)
-            keep = cur == self.SATURATED
-            new[keep] = self.SATURATED
-            self.counts[us, ui] = new
-
-    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        shard, idx = self._cells(hashes)
-        out = np.ones(len(hashes), dtype=bool)
-        for ki in range(self.params.k_hashes):
-            out &= self.counts[shard, idx[ki]] > 0
-        return out
-
-    def to_bloom(self) -> PartitionedBloom:
-        """Export membership (count > 0) as the broadcastable bit Bloom."""
-        p = self.params
-        words = p.m_bits_per_shard // 64
-        bits = np.zeros((p.num_shards, words), dtype=np.uint64)
-        shard_i, cell_i = np.nonzero(self.counts)
-        # bitwise_or.at, NOT fancy |= — duplicate (shard, word) pairs would
-        # otherwise keep only the last bit per word
-        np.bitwise_or.at(
-            bits,
-            (shard_i, cell_i >> 6),
-            np.uint64(1) << (cell_i & 63).astype(np.uint64),
-        )
-        return PartitionedBloom(p, bits)
-
-    def merge(self, other: "CountingBloom") -> "CountingBloom":
-        """Saturating elementwise sum (partial builds from Spark partitions)."""
-        s = self.counts.astype(np.uint16) + other.counts.astype(np.uint16)
-        # a saturated input stays saturated (its true count is unknown)
-        sat = (self.counts == self.SATURATED) | (other.counts == self.SATURATED)
-        out = np.minimum(s, 255).astype(np.uint8)
-        out[sat] = self.SATURATED
-        return CountingBloom(self.params, out)
+    return _probe_shards(spark_df, hash_col, shards, params.num_shards, probe)

@@ -622,7 +622,8 @@ def simhash_components(
     ``min(id)`` per hash, so propagated min-labels equal the min over the
     member union, and members inherit exactly the label the full graph
     would give them (asserted by test_dedup's contraction-equivalence
-    case).  Returns ``(id, component)`` for every input row."""
+    case).  Returns ``(id, component)`` for every input row; a row whose
+    hash is NULL is a singleton component (NULL is near nothing)."""
     reps = hashes.groupBy(hash_col).agg(F.min(id_col).alias("_rep"))
     rep_pairs = simhash_near_dup_pairs(
         reps, max_hamming=max_hamming, id_col="_rep", hash_col=hash_col,
@@ -635,8 +636,14 @@ def simhash_components(
     rep_comp = reps.join(comps, reps["_rep"] == comps["id"]).select(
         hash_col, "component"
     )
+    # the equi-join drops NULL hashes, which the union adds back; a left
+    # join would instead stop the optimizer broadcasting ``hashes``
     return hashes.join(rep_comp, hash_col).select(
         F.col(id_col).alias("id"), "component"
+    ).unionByName(
+        hashes.filter(F.col(hash_col).isNull()).select(
+            F.col(id_col).alias("id"), F.col(id_col).alias("component")
+        )
     )
 
 

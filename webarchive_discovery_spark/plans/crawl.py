@@ -42,9 +42,19 @@ from ..operators.bloom import (
     build_bloom,
     build_bloom_shards,
 )
+from ..operators.cuckoo import (
+    CuckooParams,
+    build_cuckoo_shards,
+    cuckoo_negative_filter_sharded,
+)
 from .checkpoint import CheckpointStore
 
 __all__ = ["CrawlConfig", "run_crawl"]
+
+# Bloom bit matrices up to this size are merged on the driver and broadcast;
+# larger ones (the 1e10 design point) use the sharded build + cogroup probe,
+# which never holds more than one shard in any process
+_DRIVER_MATRIX_MAX_BYTES = 4 << 30
 
 
 @dataclass
@@ -56,17 +66,10 @@ class CrawlConfig:
     bloom_capacity: int = 1_000_000
     bloom_fpr: float = 1e-6
     bloom_shards: int = 16
-    # Bloom build/probe tier: True = fully-distributed sharded build + cogroup
-    # probe (never materializes the bit matrix on the driver — the 1e10
-    # design point); False = driver-merged broadcast tier (cheaper per epoch
-    # while the whole matrix fits comfortably in driver+executor memory);
-    # None = auto by capacity (sharded when the matrix would exceed
-    # ``bloom_driver_matrix_max_bytes``)
-    bloom_sharded: bool | None = None
-    bloom_driver_matrix_max_bytes: int = 4 << 30
-    # URL-seen prefilter family: "bloom" (bit/sharded tiers above) or
-    # "cuckoo" (operators.cuckoo — deletion-capable partial-key tables,
-    # ~24 bits/URL at FPR 1e-6 vs the Bloom's 28.8, two-bucket probes).
+    # URL-seen prefilter family: "bloom" (broadcast or sharded bit matrix,
+    # by size — see _DRIVER_MATRIX_MAX_BYTES) or "cuckoo" (operators.cuckoo
+    # — sharded partial-key tables, ~24 bits/URL at FPR 1e-6 vs the Bloom's
+    # 28.8, two-bucket probes).
     # Both obey the same contract: negative ⇒ definitely new; positives
     # confirm against the exact seen-set.
     seen_filter: str = "bloom"
@@ -170,7 +173,11 @@ def _fetch_simulate(records: DataFrame, passthrough: list[str] = ("image_id",)) 
                 try:
                     dims = image_dims(data)
                     if dims:
-                        rec["header_w"], rec["header_h"] = int(dims[0]), int(dims[1])
+                        # a corrupt header can claim dims past int32: they
+                        # stay NULL (→ fetch_error), not a failed job
+                        rec["header_w"], rec["header_h"] = (
+                            int(d) if -(2**31) <= d < 2**31 else None for d in dims
+                        )
                     rgb = decode_image(data, row.fmt)
                     rec["decoded_h"], rec["decoded_w"] = int(rgb.shape[0]), int(rgb.shape[1])
                     rec["phash_check"] = average_hash(rgb)
@@ -378,6 +385,30 @@ def _membership(history: DataFrame, epoch: int, cfg: CrawlConfig) -> DataFrame:
     return history
 
 
+def _seen_prefilter(seen: DataFrame, cfg: CrawlConfig):
+    """This epoch's URL-seen prefilter, rebuilt from the membership set: a
+    function adding ``maybe_seen`` (false ⇒ definitely new; positives are
+    confirmed against the exact seen-set), or None for the exact-only
+    path."""
+    if not cfg.use_bloom:
+        return None
+    if not seen.take(1):
+        # nothing seen yet: every candidate is definitely new — no filter
+        # build and no Python stage at all
+        return lambda df: df.withColumn("maybe_seen", F.lit(False))
+    if cfg.seen_filter == "cuckoo":
+        params = CuckooParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
+        build, probe = build_cuckoo_shards, cuckoo_negative_filter_sharded
+    else:
+        params = BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
+        if params.m_bits_per_shard * params.num_shards // 8 <= _DRIVER_MATRIX_MAX_BYTES:
+            bloom = build_bloom(seen, "url_hash", params)
+            return lambda df: bloom_negative_filter(df, "url_hash", bloom)
+        build, probe = build_bloom_shards, bloom_negative_filter_sharded
+    shards = build(seen, "url_hash", params).localCheckpoint()
+    return lambda df: probe(df, "url_hash", shards, params)
+
+
 def run_crawl(
     spark: SparkSession,
     records: DataFrame,
@@ -482,56 +513,7 @@ def run_crawl(
     logs = []
     metrics = []
     for epoch in range(start_epoch, cfg.epochs):
-        bloom_probe = None
-        if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-            # cuckoo tier: same prefilter contract (negative ⇒ definitely
-            # new), deletion-capable and ~17% smaller at FPR 1e-6 — the
-            # "counting-Bloom/cuckoo hybrid" realized in the loop.  Rebuilt
-            # per epoch from the membership set like the Bloom, so recrawl
-            # expiry needs no in-place deletion here; remove_hashes serves
-            # long-lived filters maintained across epochs.
-            from ..operators.cuckoo import (
-                CuckooParams,
-                build_cuckoo_shards,
-                cuckoo_negative_filter_sharded,
-            )
-
-            cparams = CuckooParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
-            if not seen.take(1):
-                def bloom_probe(df):
-                    return df.withColumn("maybe_seen", F.lit(False))
-            else:
-                cshards = build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
-
-                def bloom_probe(df, _shards=cshards, _p=cparams):
-                    return cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
-        elif cfg.use_bloom:
-            params = BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
-            matrix_bytes = params.m_bits_per_shard * params.num_shards // 8
-            sharded = (
-                cfg.bloom_sharded
-                if cfg.bloom_sharded is not None
-                else matrix_bytes > cfg.bloom_driver_matrix_max_bytes
-            )
-            if not seen.take(1):
-                # nothing seen yet: every candidate is definitely new — skip
-                # both tiers (no Python stage at all)
-                def bloom_probe(df):
-                    return df.withColumn("maybe_seen", F.lit(False))
-            elif sharded:
-                # 1e10 design point: one shuffle on shard id builds each
-                # shard's bit array in isolation; the cogroup probe holds
-                # exactly ONE shard per task — the full matrix never exists
-                # in any single process (bloom.py:163-223)
-                shards = build_bloom_shards(seen, "url_hash", params).localCheckpoint()
-
-                def bloom_probe(df, _shards=shards, _p=params):
-                    return bloom_negative_filter_sharded(df, "url_hash", _shards, _p)
-            else:
-                bloom = build_bloom(seen, "url_hash", params)
-
-                def bloom_probe(df, _b=bloom):
-                    return bloom_negative_filter(df, "url_hash", _b)
+        bloom_probe = _seen_prefilter(seen, cfg)
 
         mark = fop.staging_mark()
         crawl_log, fetched = _epoch_plan(
@@ -575,10 +557,10 @@ def run_crawl(
             )
             delta = delta.unionByName(exhausted)
         # recrawl expiry / adaptive scheduling: history is append-only;
-        # MEMBERSHIP (what dedups next epoch) is derived from it (the
-        # deletion the counting-Bloom tier models; exact side is
-        # authoritative — the Bloom is rebuilt from the membership set at
-        # the top of each epoch, so the two tiers can never disagree)
+        # MEMBERSHIP (what dedups next epoch) is derived from it, and the
+        # exact side is authoritative — the prefilter is rebuilt from the
+        # membership set at the top of each epoch, so expiry needs no
+        # deletion from it and the two can never disagree
         history = history.unionByName(delta).localCheckpoint()
         seen = _membership(history, epoch, cfg)
 
